@@ -100,39 +100,25 @@ class Engine:
             # WHERE key = literal predicates filter GROUP KEYS only, so
             # filter-after-aggregate == aggregate-after-filter; Catalyst
             # pushes the filter below the (MV or base) aggregate, pruning
-            # the summary scan. HAVING references measure aliases — real
-            # columns of the served result — i.e. plain post-agg filters,
-            # as are ORDER BY / LIMIT over served columns (LIMIT only
-            # parses with a key-complete ORDER BY — a total order, since
-            # the group keys are unique — so the cut is deterministic).
-            for cond in where + having:
+            # the summary scan
+            for cond in where:
                 out = out.filter(F.expr(cond))
-            if order:
-                out = out.orderBy(*[
-                    F.col(c).desc() if d else F.col(c).asc()
-                    for c, d in order])
-            if limit is not None:
-                out = out.limit(limit)
-            return out, prov
+            return self._present((out, prov), having, order, limit)
         star = parse_star_agg_sql(text)
         if star is not None:
-            served = self._route_star(star[:6])
+            served = self._route_star(*star[:3])
             if served is not None:
-                return self._present(served, *star[6:])
-        star2 = parse_star2_agg_sql(text)
-        if star2 is not None:
-            served = self._route_star2(star2[:10])
-            if served is not None:
-                return self._present(served, *star2[10:])
+                return self._present(served, *star[3:])
         return self.spark.sql(text), "sql"
 
     @staticmethod
     def _present(served, having, order, limit):
-        """Apply parsed HAVING / ORDER BY / LIMIT to a routed star result.
-        All three are pure post-aggregation operations over the served
-        columns — HAVING terms compare declared aggregate ALIASES (real
-        columns of the result) to numeric literals, ORDER BY references
-        output names, and LIMIT only parses under a key-complete ORDER BY
+        """Apply parsed HAVING / ORDER BY / LIMIT to a routed flat or star
+        result. All three are pure post-aggregation operations over the
+        served columns — HAVING terms compare declared aggregate ALIASES
+        (real columns of the result) to numeric literals, ORDER BY
+        references output names, and LIMIT only parses under a
+        key-complete ORDER BY
         (a total order, since the group keys are unique per row) — so
         applying them to the routed result is positionally identical to
         plain-SQL execution; the eager-aggregation exactness argument is
@@ -147,45 +133,52 @@ class Engine:
             out = out.limit(limit)
         return out, prov
 
-    def _route_star(self, star) -> tuple[DataFrame, str] | None:
-        """Serve a single-dimension star aggregate —
-        ``SELECT d.attr, AGG(f.m) FROM fact f JOIN dim d ON f.k = d.k
-        GROUP BY d.attr`` — by eager aggregation: aggregate the fact at
-        join-key grain through the layered path, broadcast-join the dim
-        attributes onto the (summary-sized) grain rows, and re-aggregate
-        to the requested attrs. The rewrite is exact for every supported
-        measure regardless of dim-key multiplicity: each k-grain partial
-        appears once per matching dim row in BOTH the joined-then-
+    def _route_star(self, fact, dims, items) -> tuple[DataFrame, str] | None:
+        """Serve a one- or two-dimension star aggregate —
+        ``SELECT d1.a, [d2.b,] AGG(f.m) FROM fact f JOIN dim1 d1 ON
+        f.k1 = d1.dk1 [JOIN dim2 d2 ON f.k2 = d2.dk2] GROUP BY d1.a[, d2.b]``
+        — by eager aggregation: aggregate the fact at join-key grain
+        ({k1} or {k1, k2}) through the layered path, broadcast-join each
+        dim's attributes onto the (summary-sized) grain rows, and
+        re-aggregate to the requested attrs. The rewrite is exact for
+        every supported measure regardless of dim-key multiplicity: each
+        grain partial appears once per matching dim row — with two dims,
+        once per matching (dim1-row, dim2-row) PAIR, the multiplicities
+        MULTIPLY identically (m1·m2 copies) — in BOTH the joined-then-
         aggregated and the aggregated-then-joined forms (SUM/COUNT scale
         together, MIN/MAX are duplication-blind, AVG re-derives from
-        sum+count), and an inner join drops NULL/unmatched keys from
+        sum+count), and every inner join drops NULL/unmatched keys from
         both forms alike.
 
-        A WHERE conjunction of dim-attribute equalities filters the
-        broadcast dim BEFORE the grain join: the predicate references
-        only dim columns, so filtering dim rows pre-join equals
-        filtering the joined rows (inner join), which is exactly where
-        plain SQL's pre-aggregation WHERE sits — the eager-aggregation
-        exactness argument is untouched because the fact-side grain
-        partials are computed independently of which dim rows survive.
+        Each dim's WHERE conjunction of attribute equalities filters its
+        broadcast dim BEFORE its grain join: the predicate references
+        only that dim's columns, so filtering dim rows pre-join equals
+        filtering the joined rows (it commutes with every inner join),
+        which is exactly where plain SQL's pre-aggregation WHERE sits —
+        the eager-aggregation exactness argument is untouched because the
+        fact-side grain partials are computed independently of which dim
+        rows survive.
 
         Refuse-by-default: returns None — caller falls through to plain
         Spark SQL — unless some registered MV over the fact table
-        DECLARES the denormalized key set ({join key} ∪ fact-side group
+        DECLARES the denormalized key set ({join keys} ∪ fact-side group
         cols) with derivable measures, and every WHERE column exists on
-        the dim table. The fact table is then never scanned: the grain
-        read is MV- (or cache-) served, the dim is broadcast, and the
-        re-aggregation shuffles summary-sized rows.
+        its dim table. The fact table is then never scanned: the grain
+        read is MV- (or cache-) served, the dims are broadcast, and the
+        re-aggregation shuffles summary-sized rows. Provenance is
+        ``star:<layer>`` for one dim and ``star2:<layer>`` for two.
         """
-        fact, dim, fkey, dkey, items, dim_where = star
-        if fact not in self.tables or dim not in self.tables:
+        if fact not in self.tables or any(d[0] not in self.tables
+                                          for d in dims):
             return None
         fact_group = [i[2] for i in items if i[0] == "key" and i[1] == "fact"]
-        dim_attrs = [i[2] for i in items if i[0] == "key" and i[1] == "dim"]
+        attrs = [[i[2] for i in items if i[0] == "key" and i[1] == f"dim{n}"]
+                 for n in range(1, len(dims) + 1)]
+        dim_attrs = [a for per_dim in attrs for a in per_dim]
         aggs = [i for i in items if i[0] == "agg"]
         if not dim_attrs:
             return None  # no dim rollup — the flat grammar handles it
-        need_keys = {fkey, *fact_group}
+        need_keys = {*(fkey for _, fkey, _, _ in dims), *fact_group}
         if need_keys & set(dim_attrs):
             # a dim attr sharing its name with a fact grain column would
             # make the post-join groupBy ambiguous — not provably
@@ -205,19 +198,22 @@ class Engine:
             for mv, _path, bt, _b in self._mvs.values())
         if not declared:
             return None
-        dim_base = self.tables[dim]
-        if any(c not in dim_base.columns for c, _ in dim_where):
+        if any(c not in self.tables[dim].columns
+               for dim, _, _, where in dims for c, _ in where):
             return None  # unknown dim column: let plain SQL raise it
         req = AggRequest(keys={k: None for k in sorted(need_keys)},
                          measures=gm)
         grain, prov = self.aggregate(fact, req)
-        for c, lit in dim_where:
-            dim_base = dim_base.filter(F.col(c) == F.expr(lit))
-        dimdf = dim_base.select(
-            F.col(dkey).alias("__dk"),
-            *[F.col(a) for a in dim_attrs])
-        joined = grain.join(F.broadcast(dimdf),
-                            grain[fkey] == dimdf["__dk"], "inner")
+        joined = grain
+        for n, ((dim, fkey, dkey, where), dattrs) in enumerate(
+                zip(dims, attrs), 1):
+            dim_base = self.tables[dim]
+            for c, lit in where:
+                dim_base = dim_base.filter(F.col(c) == F.expr(lit))
+            dimdf = dim_base.select(F.col(dkey).alias(f"__dk{n}"),
+                                    *[F.col(a) for a in dattrs])
+            joined = joined.join(F.broadcast(dimdf),
+                                 grain[fkey] == dimdf[f"__dk{n}"], "inner")
         out_aggs = []
         for _, agg, col, alias in aggs:
             if agg == "sum":
@@ -240,98 +236,8 @@ class Engine:
         out = (joined.groupBy(*[F.col(c) for c in dim_attrs + fact_group])
                .agg(*out_aggs)
                .select(*[i[2] if i[0] == "key" else i[3] for i in items]))
-        return out, f"star:{prov}"
-
-    def _route_star2(self, star) -> tuple[DataFrame, str] | None:
-        """Serve a TWO-dimension star aggregate — ``SELECT d1.a, d2.b,
-        AGG(f.m) FROM fact f JOIN dim1 d1 ON f.k1 = d1.dk1 JOIN dim2 d2
-        ON f.k2 = d2.dk2 GROUP BY d1.a, d2.b`` — by the same eager
-        aggregation as ``_route_star``, at {k1, k2} grain. Exactness
-        extends unchanged: a (k1, k2)-grain partial appears once per
-        matching (dim1-row, dim2-row) PAIR in both the joined-then-
-        aggregated and aggregated-then-joined forms — the dim
-        multiplicities MULTIPLY identically (m1·m2 copies of each
-        partial), SUM/COUNT scale together, MIN/MAX are duplication-
-        blind, AVG re-derives from sum+count, and both inner joins drop
-        NULL/unmatched keys from both forms alike. Per-dim WHERE
-        equality conjunctions filter each broadcast dim BEFORE its join
-        (a predicate over one dim's columns commutes with both inner
-        joins). Refuse-by-default is the single-dim contract verbatim:
-        an MV over the fact must declare {k1, k2} ∪ fact-side group
-        cols with derivable measures; the fact table is never scanned.
-        """
-        fact, d1, d2, k1, dk1, k2, dk2, items, where1, where2 = star
-        if (fact not in self.tables or d1 not in self.tables
-                or d2 not in self.tables):
-            return None
-        fact_group = [i[2] for i in items if i[0] == "key" and i[1] == "fact"]
-        attrs1 = [i[2] for i in items if i[0] == "key" and i[1] == "dim1"]
-        attrs2 = [i[2] for i in items if i[0] == "key" and i[1] == "dim2"]
-        aggs = [i for i in items if i[0] == "agg"]
-        if not attrs1 and not attrs2:
-            return None  # no dim rollup — not a star
-        need_keys = {k1, k2, *fact_group}
-        if need_keys & set(attrs1 + attrs2):
-            # a dim attr sharing its name with a fact grain column makes
-            # the post-join groupBy ambiguous — not provably routable
-            return None
-        gm: dict[str, tuple[str, str]] = {}
-        for _, agg, col, alias in aggs:
-            if agg == "avg":
-                gm[f"__sum_{alias}"] = ("sum", col)
-                gm[f"__count_{alias}"] = ("count", col)
-            else:
-                gm[f"__{agg}_{alias}"] = (agg, col)
-        declared = any(
-            bt == fact and need_keys <= set(mv.keys)
-            and _derivable(gm, mv.measures)
-            for mv, _path, bt, _b in self._mvs.values())
-        if not declared:
-            return None
-        d1_base, d2_base = self.tables[d1], self.tables[d2]
-        if any(c not in d1_base.columns for c, _ in where1):
-            return None
-        if any(c not in d2_base.columns for c, _ in where2):
-            return None
-        req = AggRequest(keys={k: None for k in sorted(need_keys)},
-                         measures=gm)
-        grain, prov = self.aggregate(fact, req)
-        for c, lit in where1:
-            d1_base = d1_base.filter(F.col(c) == F.expr(lit))
-        for c, lit in where2:
-            d2_base = d2_base.filter(F.col(c) == F.expr(lit))
-        dim1df = d1_base.select(F.col(dk1).alias("__dk1"),
-                                *[F.col(a) for a in attrs1])
-        dim2df = d2_base.select(F.col(dk2).alias("__dk2"),
-                                *[F.col(a) for a in attrs2])
-        joined = (grain
-                  .join(F.broadcast(dim1df),
-                        grain[k1] == dim1df["__dk1"], "inner")
-                  .join(F.broadcast(dim2df),
-                        grain[k2] == dim2df["__dk2"], "inner"))
-        out_aggs = []
-        for _, agg, col, alias in aggs:
-            if agg == "sum":
-                out_aggs.append(
-                    F.sum(F.col(f"__sum_{alias}").cast(_DEC))
-                    .cast("double").alias(alias))
-            elif agg == "count":
-                out_aggs.append(F.sum(f"__count_{alias}")
-                                .cast("bigint").alias(alias))
-            elif agg == "avg":
-                out_aggs.append(
-                    (F.sum(F.col(f"__sum_{alias}").cast(_DEC))
-                     .cast("double") / F.sum(f"__count_{alias}"))
-                    .alias(alias))
-            else:
-                out_aggs.append(
-                    getattr(F, agg)(f"__{agg}_{alias}").alias(alias))
-        out = (joined
-               .groupBy(*[F.col(c)
-                          for c in attrs1 + attrs2 + fact_group])
-               .agg(*out_aggs)
-               .select(*[i[2] if i[0] == "key" else i[3] for i in items]))
-        return out, f"star2:{prov}"
+        tag = "star" if len(dims) == 1 else f"star{len(dims)}"
+        return out, f"{tag}:{prov}"
 
     # -- summary tables ----------------------------------------------------
     def register_mv(self, mv: MVDef, base_table: str,
@@ -491,7 +397,7 @@ _ORDER_TERM_RE = re.compile(
 def _parse_presentation(having_clause, order_clause, limit_clause,
                         key_names, agg_aliases):
     """Validate the post-aggregation presentation clauses shared by the
-    flat, star and star2 grammars. HAVING terms must compare a declared
+    flat and star grammars. HAVING terms must compare a declared
     aggregate ALIAS to a numeric literal (pure post-agg filters over real
     result columns); ORDER BY terms must be served output names (group
     keys or aliases); LIMIT routes only under a key-complete ORDER BY —
@@ -609,10 +515,13 @@ def parse_agg_sql(text: str):
             where_conds, having_conds, order_terms, limit_n, select_order)
 
 
+_JOIN_RE = re.compile(
+    r"\s+JOIN\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+"
+    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)",
+    re.IGNORECASE)
 _STAR_SHAPE_RE = re.compile(
     r"^\s*SELECT\s+(.*?)\s+FROM\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)"
-    r"\s+JOIN\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+"
-    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)"
+    rf"((?:{_JOIN_RE.pattern}){{1,2}})"
     r"(?:\s+WHERE\s+(.+?))?"
     r"\s+GROUP\s+BY\s+(.+?)"
     r"(?:\s+HAVING\s+(.+?))?"
@@ -629,153 +538,66 @@ _STAR_AGG_RE = re.compile(
 
 
 def parse_star_agg_sql(text: str):
-    """Parse the restricted single-dimension star grammar
-    ``SELECT <d.attr | f.col | AGG(f.m) AS alias>... FROM <fact> f
-    JOIN <dim> d ON f.k = d.k [WHERE d.attr = <lit> [AND ...]]
+    """Parse the restricted one- or two-dimension star grammar
+    ``SELECT <d1.a | d2.b | f.col | AGG(f.m) AS alias>... FROM <fact> f
+    JOIN <dim1> d1 ON f.k1 = d1.dk1 [JOIN <dim2> d2 ON f.k2 = d2.dk2]
+    [WHERE <dim-qualified equality conjunction>]
     GROUP BY <the non-agg select items>
     [HAVING <agg_alias> <cmp> <num> [AND ...]]
     [ORDER BY <out_col> [ASC|DESC], ...] [LIMIT n]``
-    into (fact, dim, fact_key, dim_key, items, dim_where, having, order,
-    limit) where each item is ("key", "fact"|"dim", col) or
-    ("agg", agg, col-or-*, alias) in SELECT order and dim_where is a list
-    of (dim_col, literal_text) equality conditions — or None when the
-    statement doesn't fit. HAVING / ORDER BY / LIMIT carry the flat
-    grammar's discipline verbatim (``_parse_presentation``): HAVING
-    compares declared aggregate aliases to numeric literals, ORDER BY
-    references served output names, and LIMIT requires a key-complete
-    ORDER BY (total order over unique group keys → deterministic cut).
+    into (fact, dims, items, having, order, limit) — or None when the
+    statement doesn't fit. Each entry of ``dims`` is (dim_table, fact_key,
+    dim_key, where) in JOIN order, where ``where`` lists that dim's
+    (dim_col, literal_text) equality conditions; each item is
+    ("key", "fact"|"dim1"|"dim2", col) or ("agg", agg, col-or-*, alias)
+    in SELECT order. HAVING / ORDER BY / LIMIT carry the flat grammar's
+    discipline verbatim (``_parse_presentation``): HAVING compares
+    declared aggregate aliases to numeric literals, ORDER BY references
+    served output names, and LIMIT requires a key-complete ORDER BY
+    (total order over unique group keys → deterministic cut).
 
-    Same exact-match philosophy as ``parse_agg_sql``: one INNER equi-join
-    on a single qualified column pair, every SELECT/GROUP BY column
-    qualified by a declared alias, measures only over fact columns (or
-    COUNT(*)) with mandatory AS aliases, no HAVING/expressions/OUTER
-    joins, and no duplicate output names. WHERE is accepted ONLY as a
-    conjunction of dim-qualified equality-to-literal terms: a predicate
-    over dim columns commutes with the inner join (filter the dim before
-    joining ≡ filter the joined rows) and runs pre-aggregation on both
-    the routed and plain-SQL forms, so routing stays provably exact —
-    a fact-side or non-equality WHERE returns None. Anything not
-    PROVABLY in the grammar returns None and the caller runs plain
-    Spark SQL — a mis-parse silently routed through a summary would be
-    a wrong answer.
+    Same exact-match philosophy as ``parse_agg_sql``: one or two INNER
+    equi-joins, each ON pairing the fact alias with ITS dim's alias on a
+    single qualified column pair (a dim-dim ON term would not be an
+    eager-aggregation star), pairwise distinct aliases, every
+    SELECT/GROUP BY column qualified by a declared alias, measures only
+    over fact columns (or COUNT(*)) with mandatory AS aliases, no
+    expressions/OUTER joins, and no duplicate output names. WHERE is
+    accepted ONLY as a conjunction of dim-qualified equality-to-literal
+    terms, each routed to its own dim: a predicate over one dim's columns
+    commutes with the inner joins (filter the dim before joining ≡ filter
+    the joined rows) and runs pre-aggregation on both the routed and
+    plain-SQL forms, so routing stays provably exact — a fact-side or
+    non-equality WHERE returns None. The two dim TABLES may coincide
+    (role-playing dimensions) — sides are tracked by alias throughout.
+    Anything not PROVABLY in the grammar (three or more joins included)
+    returns None and the caller runs plain Spark SQL — a mis-parse
+    silently routed through a summary would be a wrong answer.
     """
     m = _STAR_SHAPE_RE.match(text)
     if not m:
         return None
-    (sel, fact, fa, dim, da, lq, lc, rq, rc, where_clause, group_by,
-     having_clause, order_clause, limit_clause) = m.groups()
-    if fa == da or fact == dim or {lq, rq} != {fa, da}:
-        return None
-    fkey, dkey = (lc, rc) if lq == fa else (rc, lc)
-    dim_where: list[tuple[str, str]] = []
+    # groups 5-10 are the last JOIN's captures; _JOIN_RE re-reads them all
+    sel, fact, fa, joins = m.groups()[:4]
+    (where_clause, group_by, having_clause, order_clause,
+     limit_clause) = m.groups()[-5:]
+    dims: list[tuple[str, str, str, list[tuple[str, str]]]] = []
+    side_of = {fa: "fact"}
+    where_of: dict[str, list[tuple[str, str]]] = {}  # dim alias -> terms
+    for jm in _JOIN_RE.finditer(joins):
+        dim, da, lq, lc, rq, rc = jm.groups()
+        if da in side_of or dim == fact or {lq, rq} != {fa, da}:
+            return None
+        side_of[da] = f"dim{len(dims) + 1}"
+        where_of[da] = []
+        fkey, dkey = (lc, rc) if lq == fa else (rc, lc)
+        dims.append((dim, fkey, dkey, where_of[da]))
     if where_clause is not None:
         for cond in _AND_RE.split(where_clause.strip()):
             wm = _STAR_WHERE_RE.match(cond.strip())
-            if not wm or wm.group(1) != da:
+            if not wm or wm.group(1) not in where_of:
                 return None  # only dim-side equality predicates commute
-            dim_where.append((wm.group(2), wm.group(3)))
-    gterms = []
-    for g in group_by.split(","):
-        qm = _QCOL_RE.match(g.strip())
-        if not qm or qm.group(1) not in (fa, da):
-            return None
-        gterms.append(("fact" if qm.group(1) == fa else "dim", qm.group(2)))
-    items: list[tuple] = []
-    keys_seen: list[tuple[str, str]] = []
-    for item in _split_top_level(sel):
-        item = item.strip()
-        qm = _QCOL_RE.match(item)
-        if qm:
-            if qm.group(1) not in (fa, da):
-                return None
-            side = "fact" if qm.group(1) == fa else "dim"
-            items.append(("key", side, qm.group(2)))
-            keys_seen.append((side, qm.group(2)))
-            continue
-        am = _STAR_AGG_RE.match(item)
-        if not am:
-            return None
-        agg, arg, alias = am.group(1).lower(), am.group(2), am.group(3)
-        if arg == "*":
-            if agg != "count":
-                return None
-            col = "*"
-        else:
-            q, col = arg.split(".")
-            if q != fa:
-                return None  # only fact-side measures re-aggregate safely
-        items.append(("agg", agg, col, alias))
-    if sorted(keys_seen) != sorted(gterms):
-        return None
-    if not any(i[0] == "agg" for i in items):
-        return None
-    names = [i[2] if i[0] == "key" else i[3] for i in items]
-    if len(set(names)) != len(names):
-        return None
-    pres = _parse_presentation(
-        having_clause, order_clause, limit_clause,
-        [i[2] for i in items if i[0] == "key"],
-        {i[3] for i in items if i[0] == "agg"})
-    if pres is None:
-        return None
-    return (fact, dim, fkey, dkey, items, dim_where) + pres
-
-
-_STAR2_SHAPE_RE = re.compile(
-    r"^\s*SELECT\s+(.*?)\s+FROM\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)"
-    r"\s+JOIN\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+"
-    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)"
-    r"\s+JOIN\s+([A-Za-z_]\w*)\s+(?:AS\s+)?([A-Za-z_]\w*)\s+ON\s+"
-    r"([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\.([A-Za-z_]\w*)"
-    r"(?:\s+WHERE\s+(.+?))?"
-    r"\s+GROUP\s+BY\s+(.+?)"
-    r"(?:\s+HAVING\s+(.+?))?"
-    r"(?:\s+ORDER\s+BY\s+(.+?))?"
-    r"(?:\s+LIMIT\s+(\d+))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL)
-
-
-def parse_star2_agg_sql(text: str):
-    """Parse the restricted TWO-dimension star grammar
-    ``SELECT <d1.a | d2.b | f.col | AGG(f.m) AS alias>... FROM <fact> f
-    JOIN <dim1> d1 ON f.k1 = d1.dk1 JOIN <dim2> d2 ON f.k2 = d2.dk2
-    [WHERE <dim-qualified equality conjunction>] GROUP BY <the non-agg
-    select items> [HAVING ...] [ORDER BY ...] [LIMIT n]`` into
-    (fact, dim1, dim2, k1, dk1, k2, dk2, items, where1, where2, having,
-    order, limit) — item sides are "fact"/"dim1"/"dim2" — or None.
-    The presentation clauses follow ``_parse_presentation`` (alias-only
-    HAVING, served-name ORDER BY, key-complete-ORDER-BY-gated LIMIT).
-
-    Single-dim rules apply per join: each ON pairs the fact alias with
-    ITS dim's alias (a dim1-dim2 ON term would not be an eager-
-    aggregation star and returns None), aliases are pairwise distinct,
-    measures are fact-side only, WHERE terms are dim-qualified
-    equalities (routed to their own dim), and output names are unique.
-    The two dim TABLES may coincide (role-playing dimensions) — sides
-    are tracked by alias throughout.
-    """
-    m = _STAR2_SHAPE_RE.match(text)
-    if not m:
-        return None
-    (sel, fact, fa, dim1, da1, l1q, l1c, r1q, r1c,
-     dim2, da2, l2q, l2c, r2q, r2c, where_clause, group_by,
-     having_clause, order_clause, limit_clause) = m.groups()
-    if len({fa, da1, da2}) != 3 or fact in (dim1, dim2):
-        return None
-    if {l1q, r1q} != {fa, da1} or {l2q, r2q} != {fa, da2}:
-        return None
-    k1, dk1 = (l1c, r1c) if l1q == fa else (r1c, l1c)
-    k2, dk2 = (l2c, r2c) if l2q == fa else (r2c, l2c)
-    where1: list[tuple[str, str]] = []
-    where2: list[tuple[str, str]] = []
-    if where_clause is not None:
-        for cond in _AND_RE.split(where_clause.strip()):
-            wm = _STAR_WHERE_RE.match(cond.strip())
-            if not wm or wm.group(1) not in (da1, da2):
-                return None  # only dim-side equality predicates commute
-            (where1 if wm.group(1) == da1 else where2).append(
-                (wm.group(2), wm.group(3)))
-    side_of = {fa: "fact", da1: "dim1", da2: "dim2"}
+            where_of[wm.group(1)].append((wm.group(2), wm.group(3)))
     gterms = []
     for g in group_by.split(","):
         qm = _QCOL_RE.match(g.strip())
@@ -819,8 +641,7 @@ def parse_star2_agg_sql(text: str):
         {i[3] for i in items if i[0] == "agg"})
     if pres is None:
         return None
-    return (fact, dim1, dim2, k1, dk1, k2, dk2, items,
-            where1, where2) + pres
+    return (fact, dims, items) + pres
 
 
 def _split_top_level(s: str) -> list[str]:

@@ -654,6 +654,19 @@ def minhash_calibration(
     input, and re-attaching it later is what the old plan paid for). This
     is the audit you run on a sampled slice, then apply the chosen
     parameters corpus-wide.
+
+    Per-doc memory bound: ``collect_set("shingle")`` holds one document's
+    distinct shingles in a single aggregation buffer, and one group's
+    buffer cannot spill. A document of T space-separated tokens has at
+    most T - shingle_k + 1 distinct shingles, each the text of shingle_k
+    consecutive tokens, so the set's string bytes are at most
+    shingle_k × the document's text bytes (every token lands in at most
+    shingle_k shingles), plus roughly 100 B of JVM object overhead per
+    distinct shingle. With the default shingle_k=3, a 1 MB document of
+    ~170k tokens holds at most ~3 MB of strings plus ~17 MB of overhead.
+    The same set then rides each of the ``bands`` banded rows of that
+    document through the self-join. A corpus with very long documents
+    should be sampled or length-capped before this audit.
     """
     _check_banding(num_hashes, bands)
     rows_per_band = num_hashes // bands

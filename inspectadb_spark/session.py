@@ -24,6 +24,15 @@ SEMANTIC_CONFS: dict[str, str] = {
     "spark.sql.ansi.enabled": "true",
 }
 
+
+def _host_driver_memory() -> str:
+    """About three quarters of the host's physical memory, capped at 16g:
+    the driver heap must leave room for the Python workers and the OS, so
+    a fixed 16g would overcommit any host with 16 GB or less."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, total * 3 // 4 // 2**20)}m"
+
+
 # Confs that are performance defaults — override freely per deployment.
 PERF_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -34,7 +43,7 @@ PERF_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
-    "spark.driver.memory": "16g",
+    "spark.driver.memory": _host_driver_memory(),
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
 }

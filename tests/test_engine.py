@@ -484,15 +484,16 @@ def test_parse_star_agg_sql_rejects_unprovable_shapes():
 
     ok = p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
            "ON f.k = d.k GROUP BY d.x")
-    assert ok == ("fact", "dim", "k", "k",
-                  [("key", "dim", "x"), ("agg", "sum", "m", "s")], [],
+    assert ok == ("fact", [("dim", "k", "k", [])],
+                  [("key", "dim1", "x"), ("agg", "sum", "m", "s")],
                   [], [], None)
     # dim-side equality WHERE parses (filter commutes with the inner
     # join); fact-side / non-equality / unqualified WHERE refuses
     okw = p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
             "ON f.k = d.k WHERE d.region = 'EU' AND d.tier = 3 "
             "GROUP BY d.x")
-    assert okw is not None and okw[5] == [("region", "'EU'"), ("tier", "3")]
+    assert okw is not None \
+        and okw[1][0][3] == [("region", "'EU'"), ("tier", "3")]
     assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
              "ON f.k = d.k WHERE f.m = 3 GROUP BY d.x") is None
     assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
@@ -501,7 +502,7 @@ def test_parse_star_agg_sql_rejects_unprovable_shapes():
              "ON f.k = d.k WHERE region = 'EU' GROUP BY d.x") is None
     # reversed ON order still resolves the key sides
     assert p("SELECT d.x, SUM(f.m) AS s FROM fact f JOIN dim d "
-             "ON d.dk = f.fk GROUP BY d.x")[2:4] == ("fk", "dk")
+             "ON d.dk = f.fk GROUP BY d.x")[1][0][1:3] == ("fk", "dk")
     # not provably routable: dim-side measure, unqualified cols, missing
     # alias, GROUP BY mismatch, LEFT JOIN, duplicate output names
     assert p("SELECT d.x, SUM(d.m) AS s FROM f f2 JOIN d d2 "
@@ -567,21 +568,22 @@ def test_star_route_refuses_ambiguous_dim_attr_name(engine):
         "SELECT d.k, SUM(f.m) AS s FROM fact f JOIN dim d ON f.k = d.k "
         "GROUP BY d.k")
     assert star is not None  # parses...
-    fact, dim, fkey, dkey, items, dim_where = star[:6]
+    fact, dims, items = star[:3]
+    fkey = dims[0][1]
     assert fkey == "k" and [i for i in items if i[0] == "key"][0][2] == "k"
     # ...but the engine refuses it (name collision with the grain key)
-    eng_star = engine._route_star(("orders", "customer", "o_custkey",
-                                   "c_custkey", [("key", "dim", "o_custkey"),
-                                                 ("agg", "count", "*", "n")],
-                                   []))
+    eng_star = engine._route_star("orders",
+                                  [("customer", "o_custkey", "c_custkey", [])],
+                                  [("key", "dim1", "o_custkey"),
+                                   ("agg", "count", "*", "n")])
     assert eng_star is None
     # unknown dim column in WHERE: refused so plain SQL raises the real
     # analysis error instead of the route inventing one
-    eng_star2 = engine._route_star(("orders", "customer", "o_custkey",
-                                    "c_custkey",
-                                    [("key", "dim", "c_mktsegment"),
-                                     ("agg", "count", "*", "n")],
-                                    [("no_such_col", "1")]))
+    eng_star2 = engine._route_star("orders",
+                                   [("customer", "o_custkey", "c_custkey",
+                                     [("no_such_col", "1")])],
+                                   [("key", "dim1", "c_mktsegment"),
+                                    ("agg", "count", "*", "n")])
     assert eng_star2 is None
 
 
@@ -683,9 +685,9 @@ def test_sql_routed_star2_join(engine):
 
 def test_star2_refusals(engine):
     """Two-dim star refuse-by-default: undeclared key set -> plain SQL;
-    fact-side WHERE, dim-dim ON terms and fact-side grain/attr name
-    collisions never route."""
-    from inspectadb_spark.engine import parse_star2_agg_sql as p2
+    fact-side WHERE, dim-dim ON terms, fact-side grain/attr name
+    collisions and more than two joins never route."""
+    from inspectadb_spark.engine import parse_star_agg_sql as p2
 
     # no MV declares (l_orderkey, l_suppkey) on this engine: plain SQL
     _, prov = engine.sql_routed(
@@ -711,17 +713,28 @@ def test_star2_refusals(engine):
               "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
               "GROUP BY d.k1, e.b")
     assert star is not None
-    assert engine._route_star2(
-        ("lineitem", "part", "supplier", "l_partkey", "p_partkey",
-         "l_suppkey", "s_suppkey",
-         [("key", "dim1", "l_partkey"), ("agg", "count", "*", "n")],
-         [], [])) is None
+    assert engine._route_star(
+        "lineitem",
+        [("part", "l_partkey", "p_partkey", []),
+         ("supplier", "l_suppkey", "s_suppkey", [])],
+        [("key", "dim1", "l_partkey"), ("agg", "count", "*", "n")]) is None
     # unknown WHERE column on its dim: refused so plain SQL raises
-    assert engine._route_star2(
-        ("lineitem", "part", "supplier", "l_partkey", "p_partkey",
-         "l_suppkey", "s_suppkey",
-         [("key", "dim1", "p_brand"), ("agg", "count", "*", "n")],
-         [("no_such_col", "1")], [])) is None
+    assert engine._route_star(
+        "lineitem",
+        [("part", "l_partkey", "p_partkey", [("no_such_col", "1")]),
+         ("supplier", "l_suppkey", "s_suppkey", [])],
+        [("key", "dim1", "p_brand"), ("agg", "count", "*", "n")]) is None
+    # the join-count bound: a three-join star never parses, so plain SQL
+    # serves it
+    three = ("SELECT p.p_brand, s.s_nationkey, o.o_orderstatus, "
+             "COUNT(*) AS n "
+             "FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey "
+             "JOIN supplier s ON l.l_suppkey = s.s_suppkey "
+             "JOIN orders o ON l.l_orderkey = o.o_orderkey "
+             "GROUP BY p.p_brand, s.s_nationkey, o.o_orderstatus")
+    assert p2(three) is None
+    _, prov3 = engine.sql_routed(three)
+    assert prov3 == "sql"
 
 
 def test_star_route_having_order_limit(engine):
@@ -731,7 +744,6 @@ def test_star_route_having_order_limit(engine):
     forms; LIMIT routes only under a key-complete ORDER BY and HAVING
     only over declared aggregate aliases."""
     from inspectadb_spark.engine import parse_star_agg_sql as p
-    from inspectadb_spark.engine import parse_star2_agg_sql as p2
 
     engine.register_mv(
         MVDef(name="mv_orders_by_cust_h", keys=("o_custkey",),
@@ -771,18 +783,18 @@ def test_star_route_having_order_limit(engine):
     assert p(base + " ORDER BY s DESC LIMIT 5") is None
     assert p(base + " ORDER BY zz") is None
     ok = p(base + " HAVING s >= 0 AND s < 100 ORDER BY s DESC, x LIMIT 5")
-    assert ok is not None and ok[6] == ["s >= 0", "s < 100"] \
-        and ok[7] == [("s", True), ("x", False)] and ok[8] == 5
+    assert ok is not None and ok[3] == ["s >= 0", "s < 100"] \
+        and ok[4] == [("s", True), ("x", False)] and ok[5] == 5
     # star2 carries the same discipline
     base2 = ("SELECT d.a, e.b, COUNT(*) AS n FROM f t "
              "JOIN d1 d ON t.k1 = d.dk JOIN d2 e ON t.k2 = e.dk "
              "GROUP BY d.a, e.b")
-    assert p2(base2 + " HAVING a > 3") is None
-    assert p2(base2 + " ORDER BY n DESC LIMIT 2") is None
-    ok2 = p2(base2 + " HAVING n > 1 ORDER BY n DESC, a, b LIMIT 2")
-    assert ok2 is not None and ok2[10] == ["n > 1"] \
-        and ok2[11] == [("n", True), ("a", False), ("b", False)] \
-        and ok2[12] == 2
+    assert p(base2 + " HAVING a > 3") is None
+    assert p(base2 + " ORDER BY n DESC LIMIT 2") is None
+    ok2 = p(base2 + " HAVING n > 1 ORDER BY n DESC, a, b LIMIT 2")
+    assert ok2 is not None and ok2[3] == ["n > 1"] \
+        and ok2[4] == [("n", True), ("a", False), ("b", False)] \
+        and ok2[5] == 2
 
 
 def test_star2_route_having_order_limit(engine):

@@ -710,12 +710,11 @@ def test_star2_route_equals_direct_property(spark, tmp_path_factory,
         "fact2_p")
     w1 = [] if flt1 is None else [("a1", f"'{flt1}'")]
     w2 = [] if flt2 is None else [("a2", f"'{flt2}'")]
-    served = eng._route_star2(
-        ("fact2_p", "dim1_p", "dim2_p", "k1", "dk", "k2", "dk",
-         [("key", "dim1", "a1"), ("key", "dim2", "a2"),
-          ("agg", "sum", "m", "s"), ("agg", "count", "*", "n"),
-          ("agg", "avg", "m", "a")],
-         w1, w2))
+    served = eng._route_star(
+        "fact2_p", [("dim1_p", "k1", "dk", w1), ("dim2_p", "k2", "dk", w2)],
+        [("key", "dim1", "a1"), ("key", "dim2", "a2"),
+         ("agg", "sum", "m", "s"), ("agg", "count", "*", "n"),
+         ("agg", "avg", "m", "a")])
     assert served is not None
     routed, prov = served
     assert prov.startswith("star2:")
@@ -756,10 +755,9 @@ def test_serving_grammar_parsers_never_raise(text):
     parser must either return a parse or None (fall through to plain
     Spark SQL), never raise. The refuse-by-default contract is only
     safe if refusal is total."""
-    from inspectadb_spark.engine import (
-        parse_agg_sql, parse_star2_agg_sql, parse_star_agg_sql)
+    from inspectadb_spark.engine import parse_agg_sql, parse_star_agg_sql
 
-    for p in (parse_agg_sql, parse_star_agg_sql, parse_star2_agg_sql):
+    for p in (parse_agg_sql, parse_star_agg_sql):
         p(text)  # must not raise; value unchecked
 
 
