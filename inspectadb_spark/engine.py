@@ -24,6 +24,14 @@ Invalidation is file-version-based end to end: ``apply_changes`` (CDC
 upsert/delete merge) rewrites the table files, which rotates every
 dependent cache fingerprint automatically; MV staleness is the refresh
 contract (``refresh_mv`` for batch, streaming/incremental.py for live).
+
+Every directory the engine writes — table versions, MV versions, cache
+entries — goes through ``operators/parquet_store.py``, so reading it back
+skips Spark's one-task schema-inference job: the schema recorded at write
+time is the one inference would return (the footer carries the written
+Catalyst schema and a file source forces every field nullable either
+way), so plans and cache fingerprints are unchanged. A warm cache hit runs
+one Spark job, the read itself.
 """
 
 from __future__ import annotations
@@ -38,6 +46,8 @@ from inspectadb_spark.catalog import load_tables
 from inspectadb_spark.operators.mv import _DEC, AggRequest, GroupingSetMV
 from inspectadb_spark.operators.mv import MVDef, _derivable
 from inspectadb_spark.operators.mv import route as _mv_route
+from inspectadb_spark.operators.parquet_store import read_parquet
+from inspectadb_spark.operators.parquet_store import write_parquet
 from inspectadb_spark.operators.result_cache import ResultCache
 
 
@@ -69,7 +79,7 @@ class Engine:
             if table in self.tables and os.path.exists(ptr):
                 with open(ptr) as f:
                     path = f.read().strip()
-                self.tables[table] = self.spark.read.parquet(path)
+                self.tables[table] = read_parquet(self.spark, path)
                 base = os.path.basename(path)
                 if base.startswith("v"):
                     self._table_version[table] = int(base[1:])
@@ -312,7 +322,7 @@ class Engine:
         # intact and committed
         version = self._table_version.get(table, 0) + 1
         out = os.path.join(self.work_dir, "tables", table, f"v{version}")
-        merged.write.mode("overwrite").parquet(out)
+        write_parquet(merged, out)
         ptr = os.path.join(self.work_dir, "tables", table, "CURRENT")
         tmp = ptr + ".tmp"
         with open(tmp, "w") as f:
@@ -325,7 +335,7 @@ class Engine:
             import shutil
 
             shutil.rmtree(old, ignore_errors=True)
-        self.tables[table] = self.spark.read.parquet(out)
+        self.tables[table] = read_parquet(self.spark, out)
         self.tables[table].createOrReplaceTempView(table)
         if refresh_dependents:
             # rotate dependent summaries too, so MV-routed plans (and the

@@ -50,6 +50,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inspectadb_spark.operators.parquet_store import memoized, read_parquet
+from inspectadb_spark.operators.parquet_store import write_parquet
+
 _DEC = "decimal(18,6)"
 
 
@@ -60,6 +63,11 @@ _DEC = "decimal(18,6)"
 # committed version intact and addressed; a reader that resolved the old
 # pointer keeps its files for one more refresh (one-version grace) — the
 # exact crash window an in-place overwrite left open (ADVICE r04 item 1).
+# Versions are written and read through operators/parquet_store.py, so a
+# route reads the committed version with its recorded schema and no
+# schema-inference job: the footer carries the Catalyst schema that was
+# written and a file source forces every field nullable either way, so the
+# plan (and every cache fingerprint over it) is the one inference gives.
 
 def _read_current(path: str) -> tuple[int, str | None]:
     """(committed version number, committed dir) — (0, None) if none."""
@@ -126,9 +134,7 @@ class MVDef:
         """Materialize to parquet (the batch refresh; streaming refresh is
         streaming/incremental.py feeding the same path). Versioned + atomic
         pointer swap: see ``_commit_versioned``."""
-        _commit_versioned(
-            lambda d: self.build(base).write.mode("overwrite").parquet(d),
-            path)
+        _commit_versioned(lambda d: write_parquet(self.build(base), d), path)
 
 
 @dataclass(frozen=True)
@@ -334,36 +340,29 @@ def stored_rows(path: str) -> int:
     expensive MV (ADVICE r05 item 5). A committed version dir never
     nests another ``v<N>``, so the exclusion is a no-op there.
 
-    Memoized on (path, directory mtime): committed version dirs are
-    copy-on-write (immutable → permanent hit), while a legacy in-place
-    root rewritten by a refresh changes its mtime and re-counts — without
-    the memo every aggregate() call on the serving hot path re-paid a
-    recursive glob plus a footer read per file per candidate MV."""
+    Memoized on (path, directory mtime) in parquet_store's bounded memo:
+    committed version dirs are copy-on-write (immutable → hit until
+    evicted), while a legacy in-place root rewritten by a refresh changes
+    its mtime and re-counts — without the memo every aggregate() call on
+    the serving hot path re-paid a recursive glob plus a footer read per
+    file per candidate MV."""
+    return memoized(path, "rows", lambda: _count_rows(path))
+
+
+def _count_rows(path: str) -> int:
     import glob as _glob
-    import os as _os
     import re as _re
 
     import pyarrow.parquet as pq
 
-    try:
-        key = (path, _os.stat(path).st_mtime_ns)
-    except OSError:
-        key = None
-    if key is not None and key in _STORED_ROWS_CACHE:
-        return _STORED_ROWS_CACHE[key]
     total = 0
-    for f in _glob.glob(_os.path.join(path, "**", "*.parquet"),
+    for f in _glob.glob(os.path.join(path, "**", "*.parquet"),
                         recursive=True):
-        first = _os.path.relpath(f, path).split(_os.sep)[0]
+        first = os.path.relpath(f, path).split(os.sep)[0]
         if _re.fullmatch(r"v\d+", first):
             continue
         total += pq.ParquetFile(f).metadata.num_rows
-    if key is not None:
-        _STORED_ROWS_CACHE[key] = total
     return total
-
-
-_STORED_ROWS_CACHE: dict[tuple[str, int], int] = {}
 
 
 def route(
@@ -388,7 +387,7 @@ def route(
         candidates.append((stored_rows(committed), name, mv, committed))
     if candidates:
         _, name, mv, committed = min(candidates, key=lambda c: (c[0], c[1]))
-        return _answer_from_mv(spark.read.parquet(committed), req, mv), name
+        return _answer_from_mv(read_parquet(spark, committed), req, mv), name
     return _answer_from_base(base, req), None
 
 
@@ -435,8 +434,8 @@ class GroupingSetMV:
 
     def store(self, base: DataFrame, path: str) -> None:
         _commit_versioned(
-            lambda d: (self.build(base).write.mode("overwrite")
-                       .partitionBy("grouping_id").parquet(d)),
+            lambda d: write_parquet(self.build(base), d,
+                                    partition_by=("grouping_id",)),
             path)
 
     def answer(self, spark: SparkSession, path: str,
@@ -465,7 +464,7 @@ class GroupingSetMV:
         if committed is None:
             return None
         stored = {(agg, expr): out for out, (agg, expr) in self.measures.items()}
-        mv_df = spark.read.parquet(committed)
+        mv_df = read_parquet(spark, committed)
         exact = None if dcols else next(
             (s for s in self.sets if set(s) == set(want)), None)
         if exact is not None:

@@ -33,6 +33,14 @@ SUBSUMPTION (answering a coarser query from a finer cached result) is the
 materialized-view routing algebra — operators/mv.py — not this module;
 this cache is exact-match only, by design, because plan equality is
 decidable where query containment is not.
+
+Entries are written and read through ``operators/parquet_store.py``: a hit
+reads the entry with the schema recorded when it was written, so it runs no
+schema-inference job. That is exact — the footer carries the Catalyst
+schema that was written and a file source forces every field nullable
+either way — so the served plan, and any fingerprint taken over it, is the
+one inference would give. A hit's cost is then the fingerprint (driver-side
+metadata) plus the one job that reads the entry.
 """
 
 from __future__ import annotations
@@ -43,6 +51,9 @@ import shutil
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from inspectadb_spark.operators.parquet_store import read_parquet
+from inspectadb_spark.operators.parquet_store import write_parquet
 
 # On-disk cache layout version. Entries live under cache_dir/v{N}/<fp>;
 # bumped whenever the fingerprint recipe changes meaning (v2 = output
@@ -136,19 +147,13 @@ class ResultCache:
     def _path(self, fp: str) -> str:
         return os.path.join(self.store_dir, fp)
 
-    def lookup(self, df: DataFrame) -> DataFrame | None:
-        p = self._path(fingerprint(df))
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.read.parquet(p)
-        return None
-
     def get_or_compute(self, df: DataFrame) -> tuple[DataFrame, bool]:
         fp = fingerprint(df)
         p = self._path(fp)
         if os.path.exists(os.path.join(p, "_SUCCESS")):
-            return self.spark.read.parquet(p), True
-        df.write.mode("overwrite").parquet(p)
-        return self.spark.read.parquet(p), False
+            return read_parquet(self.spark, p), True
+        write_parquet(df, p)
+        return read_parquet(self.spark, p), False
 
     def vacuum(self, keep_fingerprints: set[str] | None = None) -> int:
         """Drop cached entries (all, or all but ``keep_fingerprints``);

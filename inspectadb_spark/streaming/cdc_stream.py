@@ -11,6 +11,10 @@ whenNotMatched insert).
 
 Idempotent under micro-batch re-delivery: re-applying any prefix of changes
 cannot change the latest-wins outcome (max-lsn row per key is stable).
+
+State versions go through ``operators/parquet_store.py``: each micro-batch
+reads the previous version with the schema recorded when it was written,
+not through a schema-inference job.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from inspectadb_spark.operators.cdc import latest_per_key
+from inspectadb_spark.operators.parquet_store import read_parquet
+from inspectadb_spark.operators.parquet_store import write_parquet
 
 
 class StreamingCdcApply:
@@ -64,7 +70,7 @@ class StreamingCdcApply:
             return None
         with open(ptr) as f:
             path = f.read().strip()
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
     def current_state(self) -> DataFrame | None:
         """User-facing view: tombstones filtered out."""
@@ -86,7 +92,7 @@ class StreamingCdcApply:
         new_state = latest_per_key(merged_input, self.key_cols, self.order_col)
         self._version += 1
         out = os.path.join(self.state_dir, f"v{self._version}")
-        new_state.write.mode("overwrite").parquet(out)
+        write_parquet(new_state, out)
         tmp = self._ptr() + ".tmp"
         with open(tmp, "w") as f:
             f.write(out)

@@ -11,9 +11,10 @@ DECIMAL(18,6) so merge order can never change the value), min (min),
 max (max). avg is derived as sum/count in the reader view, never stored.
 
 State versions are written to alternating directories and atomically
-re-pointed (same crash story as ``StreamingCdcApply``); on a transactional
-table format the body of ``_merge_batch`` becomes a single MERGE INTO with
-additive updates. Merge cost per batch is O(|groups| + |batch partials|) —
+re-pointed (same crash story as ``StreamingCdcApply``), and read back
+through ``operators/parquet_store.py`` without a schema-inference job; on
+a transactional table format the body of ``_merge_batch`` becomes a single
+MERGE INTO with additive updates. Merge cost per batch is O(|groups| + |batch partials|) —
 independent of stream history length; state size is the group count.
 
 Idempotence: unlike latest-wins CDC apply, additive merges are NOT
@@ -33,6 +34,9 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from inspectadb_spark.operators.parquet_store import read_parquet
+from inspectadb_spark.operators.parquet_store import write_parquet
 
 # kind -> (partial agg sql over source expr, merge agg sql over partial col)
 _KINDS = {
@@ -112,7 +116,7 @@ class IncrementalAggregate:
         committed = self._read_ptr()
         if committed is None:
             return None
-        return self.spark.read.parquet(committed[0])
+        return read_parquet(self.spark, committed[0])
 
     def _partial(self, batch: DataFrame) -> DataFrame:
         # group directly by the aliased key expressions (a select-then-group
@@ -158,7 +162,7 @@ class IncrementalAggregate:
         new_state = self._merge_states(merged_in)
         self._version += 1
         out = os.path.join(self.state_dir, f"v{self._version}")
-        new_state.write.mode("overwrite").parquet(out)
+        write_parquet(new_state, out)
         tmp = self._ptr() + ".tmp"
         with open(tmp, "w") as f:
             f.write(f"{out}\n{self._checkpoint or ''}\n{batch_id}")

@@ -916,3 +916,45 @@ def test_mv_name_collision_across_registries_raises(spark,
             GroupingSetMV(name="dup_name", keys=("o_orderstatus",),
                           sets=(("o_orderstatus",),),
                           measures={"n": ("count", "*")}), "orders")
+
+
+def test_warm_cache_hit_runs_one_job_and_cold_memo_keeps_fingerprint(
+        spark, tmp_path_factory):
+    """A warm cache hit reads the MV version (or table version) and the
+    cache entry with the schemas recorded when they were written, so the
+    read itself is its only Spark job. A cleared memo — a restarted
+    process — infers the same schemas, hence the same plan fingerprint:
+    a new Engine over the same work_dir still serves the read as cache."""
+    from pyspark.sql import Row
+
+    from inspectadb_spark.operators import parquet_store
+    from tests.test_parquet_store import spark_jobs
+
+    work = str(tmp_path_factory.mktemp("engjobs"))
+    eng = Engine(spark, SF_DIR, work)
+    eng.register_mv(
+        MVDef(name="mv_status", keys=("o_orderstatus",),
+              measures={"sum_tp": ("sum", "o_totalprice"),
+                        "cnt": ("count", "*")}), "orders")
+    victim = eng.table("orders").limit(1).collect()[0]
+    eng.apply_changes("orders", spark.createDataFrame(
+        [Row(lsn=1, op="d", **victim.asDict())]), ["o_orderkey"])
+    mv_text = ("SELECT o_orderstatus, SUM(o_totalprice) AS total, "
+               "COUNT(*) AS n FROM orders GROUP BY o_orderstatus")
+    base_text = ("SELECT o_orderpriority, COUNT(*) AS n FROM orders "
+                 "GROUP BY o_orderpriority")
+
+    def served(engine, text):
+        df, prov = engine.sql_routed(text)
+        return _rows(df), prov
+
+    want = {}
+    for text, layer in ((mv_text, "mv:mv_status"), (base_text, "base")):
+        want[text], prov = served(eng, text)
+        assert prov == layer
+        (rows, prov), jobs = spark_jobs(spark, lambda: served(eng, text))
+        assert (rows, prov, jobs) == (want[text], "cache", 1)
+
+    parquet_store._MEMO.clear()
+    restarted = Engine(spark, SF_DIR, work)
+    assert served(restarted, base_text) == (want[base_text], "cache")
